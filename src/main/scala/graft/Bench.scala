@@ -1,57 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // let AQE coalesce tiny shuffle outputs down to the data size
-      // instead of keeping one partition per core: at bench scale most
-      // post-shuffle stages carry a few MB, and 32 near-empty tasks per
-      // stage (plus 32 output files per round table) cost more in
-      // scheduling than the work itself. At 100 TB the same setting is
-      // what stops a 10k-partition shuffle from emitting 10k tiny files
-      // after a selective filter.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      // the engine's object-buffered aggregates (MaxByRow) hold ONE row
-      // per group, not a collect_list — the conservative 128-key default
-      // exists for the latter and silently sorts the tail of any
-      // high-cardinality task (see Expressions.MaxByRow)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // Checkpoint I/O (FileContext API) through the RAW local fs:
-      // Hadoop's default local AbstractFileSystem is checksummed, so
-      // every streaming WAL entry, offset/commit log and HDFS-backed
-      // state delta writes a .crc sidecar and re-reads it on open —
-      // doubled file ops on the per-micro-batch hot path. The raw
-      // rebind affects only the `file` scheme's FileContext users (the
-      // checkpoint stack); FileSystem-API users (parquet scans/writes,
-      // RocksDB's file manager, which REQUIRES the checksummed
-      // FileSystem for its commit protocol) are untouched. On a
-      // cluster checkpoints live on HDFS/object stores and the knob is
-      // inert. Measured r17: incr_stream_join's stream phase drops
-      // 2.66-2.81 s -> 1.84-2.01 s, confirmed in both A/B orders.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // FileSystem-API twin of the FileContext rebind above: stop the
-    // cached local FileSystem from WRITING .crc sidecars (scratch
-    // parquet/json/orc, store appends, sink rewrites). Same class, same
-    // rename/commit semantics — only sidecar creation is skipped, so
-    // RocksDB's checksummed-FileSystem commit protocol is unaffected
-    // (the full RawLocalFileSystem rebind broke it and was reverted).
-    // local[*] shares one JVM-wide FileSystem cache entry, so one call
-    // covers driver and executors.
-    locally {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
-      fs.setWriteChecksum(false)
-      fs.setVerifyChecksum(false)
-    }
+    val spark = GraftSession.start(GraftSession.cpus)
     // JVM/codegen warmup so the first measured query doesn't absorb
     // classloading + first-job scheduling cost; touching every table once
     // fills the resolved-relation cache (file listing + schema) and the

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of each
-  * named query (or all) against a given sf dir. Used to keep scans
-  * pruned/pushed and joins broadcast where they should be.
+  * named query (or all) against a given sf dir, on Bench's session at
+  * `SPARK_GRAFT_CPUS`. Used to keep scans pruned/pushed and joins
+  * broadcast where they should be.
   *
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
   */
@@ -12,12 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else Queries.all.map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.start(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val byName = Queries.all.map(q => q.name -> q).toMap
     names.foreach { n =>

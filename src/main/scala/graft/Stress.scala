@@ -119,15 +119,7 @@ object Stress {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.applyRecommendedConfs(spark)
+    val spark = GraftSession.start(GraftSession.cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect() // warmup
 
     val baseDocs = sys.env.getOrElse("SPARK_GRAFT_STRESS_BASE", "5000").toLong

@@ -759,7 +759,14 @@ object Graph {
   /** Driver twin of [[personalizedPageRankScaled]] — identical
     * truncating steps and seed semantics (seed-only rank at round 0,
     * restart share only on seeds, seeds outside the node set ignored),
-    * bit-equal by order-independence (pinned in GraphSpec). */
+    * bit-equal by order-independence, same schema (both pinned in
+    * GraphSpec).
+    *
+    * Precondition: `nodes` holds distinct, non-binary ids. The maps key
+    * on `Any`, so an `Array[Byte]` id compares by reference where the
+    * distributed equi-joins compare by value, and a duplicated node row
+    * is one map entry here but doubles its contributions in the
+    * distributed joins. */
   private def driverPersonalizedPageRank(spark: SparkSession,
                                          nodeField: org.apache.spark.sql.types.StructField,
                                          eRows: Array[org.apache.spark.sql.Row],
@@ -805,7 +812,8 @@ object Graph {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = StructType(Seq(
       StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = false)))
+      // nullable, as the distributed path returns it
+      StructField("rank_scaled", LongType, nullable = true)))
     spark.createDataFrame(out.asJava, schema)
   }
 

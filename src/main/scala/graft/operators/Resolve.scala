@@ -34,8 +34,7 @@ object Resolve {
     // split fans out to GBs of pairs). An explicit-count repartition on
     // the block key is exempt from AQE coalescing and spreads the pair
     // generation across the shuffle width.
-    val shuffleN = math.max(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, 1)
+    val shuffleN = graft.GraftSession.shuffleWidth(df.sparkSession)
     val a = df.select(col(blockCol).as("block"), col(idCol).as("id_a"),
       col(nameCol).as("__name_a"))
       .repartition(shuffleN, col("block"))

@@ -346,8 +346,7 @@ object Dedup {
     // whole new-vs-store candidate verify (output >> input — the shape
     // AQE's input-size coalescing cannot see) runs in one or two tasks.
     // An explicit-count repartition is exempt from AQE coalescing.
-    val shuffleN = math.max(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, 1)
+    val shuffleN = graft.GraftSession.shuffleWidth(spark)
     val storeB = chunkBuckets(store).repartition(shuffleN, col("chunk"), col("cv"))
     val hot = storeB.groupBy(col("chunk"), col("cv"))
       .agg(count(lit(1)).as("__n"))
@@ -454,8 +453,7 @@ object Dedup {
     // output dwarfs its input (the classic exploding-stage shape AQE
     // cannot see). An explicit-count repartition is exempt from AQE
     // coalescing, so the pair loops run at full width.
-    val shuffleN = math.max(
-      docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, 1)
+    val shuffleN = graft.GraftSession.shuffleWidth(docs.sparkSession)
     val grouped = buckets.repartition(shuffleN, col("chunk"), col("cv"))
       .groupBy(col("chunk"), col("cv"))
       .agg(collect_list(struct(col(idCol), col("simhash"))).as("__m"))

@@ -197,8 +197,7 @@ object Features {
         .filter(col("__mx").isNull || col("y") > col("__mx"))
         .drop("__mx")
     }
-    val shuffleN = math.max(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, 1)
+    val shuffleN = graft.GraftSession.shuffleWidth(df.sparkSession)
     val spread = perX
       .withColumn("__bkt", pmod(xxhash64(col("x")), lit(32L * shuffleN)))
       .repartition(shuffleN, col("__bkt"))

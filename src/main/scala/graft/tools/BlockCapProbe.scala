@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level timer for the shard-capped blocking pattern the
@@ -16,19 +15,13 @@ import org.apache.spark.sql.functions._
   * magnitude, not a compile/steady split.
   *
   * Run: SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 sbt "runMain graft.tools.BlockCapProbe"
-  * Honors SPARK_GRAFT_CPUS (default 32) for master threads AND shuffle
-  * partitions, matching the Verify/Bench mains it attributes for.
+  * Runs on the Bench/Verify session (`graft.GraftSession`) at
+  * SPARK_GRAFT_CPUS, so it times the plans those mains run.
   */
 object BlockCapProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(graft.GraftSession.cpus)
     def t(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query scheduling profile: run each named query once (count()
   * action, same as the bench) under a listener and report how many
@@ -11,30 +10,16 @@ import org.apache.spark.sql.SparkSession
   * loops), not by compute — the guide §1 "where is the time" split at
   * local[32] granularity.
   *
-  * Usage: runMain graft.tools.JobProfile <sfDir> <cpus> <query> [query...]
+  * Usage: runMain graft.tools.JobProfile <sfDir> [cpus] [query...]
+  * (cpus defaults to SPARK_GRAFT_CPUS; no query names profiles all)
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = args.lift(1).getOrElse("32")
+    val cpus = args.lift(1).fold(graft.GraftSession.cpus)(_.toInt)
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .getOrCreate()
+    val spark = graft.GraftSession.start(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    locally {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
-      fs.setWriteChecksum(false)
-      fs.setVerifyChecksum(false)
-    }
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
@@ -62,8 +47,8 @@ object JobProfile {
           val t0 = System.nanoTime()
           q.fn(spark, sfDir).count()
           val wall = (System.nanoTime() - t0) / 1e9
-          // let straggling listener events drain before reading counters
-          Thread.sleep(150)
+          // deliver every posted listener event before reading counters
+          org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
           println(f"$n%-28s $run%3d $jobs%5d $stages%7d $tasks%6d ${taskMs / 1e3}%8.2f $wall%8.2f")
         }
         // drain BETWEEN queries only (the Bench rule): a query's repeat

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale profiler for `prefixFilteredJaccardPairs` (round 14, VERDICT
   * item 6): times the operator's three stages independently at any SF
   * so the sf10 cost (52 s at 500k docs in the r13 probe) can be
@@ -18,13 +16,7 @@ import org.apache.spark.sql.SparkSession
 object SetsimProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(graft.GraftSession.cpus)
     val docs = graft.Tables.documents(spark, sfDir)
     // the ledger query's parameters (setsim_prefix_join)
     val (n, threshold) = (3, 0.5)

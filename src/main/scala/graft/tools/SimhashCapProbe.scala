@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** maxBucket cost-ladder probe for the simhash near-dup operators. The
@@ -25,13 +25,7 @@ object SimhashCapProbe {
     // "batch" | "incr" | "both" (default): repeat a one-sided ladder to
     // separate cap effects from single-box noise
     val mode = if (args.length > 1) args(1) else "both"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start(graft.GraftSession.cpus)
 
     val docs = graft.Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))

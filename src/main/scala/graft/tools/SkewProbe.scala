@@ -1,16 +1,15 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // local[4] and 16 shuffle partitions: the SkewExtensionsSpec fixture
+    // this probe calibrates
+    val s = graft.GraftSession.start(4)
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import s.implicits._
-    s.sparkContext.setLogLevel("WARN")
     val large = (1 to 200000)
       .map(i => (if (i % 10 != 0) 7L else i.toLong, i)).toDF("k", "v")
     val medium = (1L to 500L).map(k => (k, s"m$k")).toDF("k", "name")

@@ -156,17 +156,20 @@ class GraphSpec extends SparkTestBase {
       .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
     assert(r == Map(1L -> 150000000L, 2L -> 850000000L, 3L -> 0L))
 
-    // driver fast path == distributed rounds bit for bit: duplicate
-    // seeds collapse (distinct), a seed outside the node set is ignored,
-    // non-node sources carry no rank, non-node destinations drop
+    // driver fast path == distributed rounds bit for bit, with the same
+    // schema: duplicate seeds collapse (distinct), a seed outside the
+    // node set is ignored, non-node sources carry no rank, non-node
+    // destinations drop
     val messy = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 99L), (98L, 2L))
       .toDF("src", "dst")
     val seeds = Seq(1L, 1L, 3L, 77L).toDF("node")
-    def of(driverRows: Int) =
+    def run(driverRows: Int) =
       Graph.personalizedPageRankScaled(messy, n, seeds, iterations = 3,
-          driverRows = driverRows)
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
+        driverRows = driverRows)
+    def of(driverRows: Int) =
+      run(driverRows).collect().map(x => (x.getLong(0), x.getLong(1))).toMap
     assert(of(100000) == of(0))
+    assert(run(100000).schema == run(0).schema)
   }
 
   test("hitsScaled: star graph by hand, checkpoint invariance, edgeless zeros") {

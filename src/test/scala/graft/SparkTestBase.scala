@@ -5,19 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (getOrCreate returns the
   * same session; ScalaTest runs suites in one JVM with Test/fork=true).
+  * It is Bench's session ([[GraftSession.start]]) at local[4]; managed
+  * tables land under /tmp/graft-warehouse, a static conf that only a
+  * system property can set before the session starts.
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    sys.props.getOrElseUpdate("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+    GraftSession.start(4)
   }
 
   def sf(name: String) = s"/root/testdata/$name"
