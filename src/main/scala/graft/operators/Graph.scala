@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.functions.GraftFunctions.relationshipId
 import graft.plans.Materialize.CheckpointOps
 
@@ -175,6 +177,47 @@ object Graph {
       .withColumn("rel_type", lit(relType))
   }
 
+  /** Default `driverRows` cap of every adaptive operator below. */
+  private[graft] val DefaultDriverRows: Int = 100000
+
+  /** The driver-or-distributed seam of the adaptive operators (the
+    * [[graft.ops.Skew]] philosophy applied to iteration). Many graphs
+    * are small — dimension hierarchies, gate-scale link graphs — and for
+    * those the per-round job launches dominate. A capped
+    * `limit(cap+1)` probe (the `maxHotKeys+1` collect idiom from
+    * adaptive salting) decides in ONE early-terminating job: when the
+    * input fits, the operator's driver twin runs over the collected rows
+    * (bounded model state, the IVF codebook precedent) with the loop's
+    * semantics; otherwise the distributed loop runs, and a big input
+    * pays one capped partial scan, never a full collect.
+    *
+    * One null rule: a probe that holds a NULL in any probed column does
+    * not admit its rows, so NULL ids (and weights) always take the
+    * distributed loop, whose equi-join semantics are the contract. Twins
+    * build their result through [[driverFrame]], declaring the
+    * nullability their loop returns; GraphSpec's twin table pins values
+    * and schema on both sides of the cap. Twins that key maps on `Any`
+    * (closure, rank kernel, HITS) assume non-binary ids: an
+    * `Array[Byte]` compares by reference there, by value in the loop.
+    */
+  private def capProbe(df: DataFrame, cap: Int): Array[Row] =
+    df.limit(cap + 1).collect()
+
+  /** The probed rows, when they fit under `cap` and hold no NULL. */
+  private def admitted(rows: Array[Row], cap: Int): Option[Array[Row]] =
+    if (rows.length <= cap && !rows.exists(r => (0 until r.length).exists(r.isNullAt)))
+      Some(rows)
+    else None
+
+  /** [[capProbe]] then [[admitted]]: a driver twin's input, or None. */
+  private def underCap(df: DataFrame, cap: Int): Option[Array[Row]] =
+    admitted(capProbe(df, cap), cap)
+
+  /** A driver twin's rows as a local frame. */
+  private def driverFrame(spark: SparkSession, rows: Seq[Row],
+                          fields: StructField*): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(fields))
+
   /** J4 parent-hierarchy expansion (etl_flow.py:359-414): the reference
     * walks `parent_company_id` chains one HTTP fetch at a time; here it is
     * an iterative self-join to fixpoint producing (node, ancestor, depth).
@@ -186,37 +229,32 @@ object Graph {
     * the whole closure), so work is proportional to path count; maxDepth
     * bounds the number of shuffles.
     *
-    * Adaptive small-hierarchy path (the [[graft.ops.Skew]] philosophy
-    * applied to iteration): parent hierarchies are usually DIMENSION
-    * data — thousands of companies, not billions — and for those the
-    * per-round job launches dominate. A capped `limit(driverRows+1)`
-    * probe (the `maxHotKeys+1` collect idiom from adaptive salting)
-    * decides in ONE early-terminating job: when the edge list fits, the
-    * closure is a driver BFS over the collected edges (bounded model
-    * state, the IVF codebook precedent) with IDENTICAL semantics —
-    * per-path multiplicity, pair-level cycle guard against earlier
-    * depths. The driver result is capped at 10×`driverRows` rows (a
-    * dense DAG's path count can explode combinatorially); on breach the
-    * operator falls back to the distributed loop, which shares the
-    * blowup across executors. Big graphs pay one capped partial scan
-    * and never collect the full edge set.
+    * Adaptive small-hierarchy path (the driver-or-distributed seam, see
+    * [[capProbe]]): parent hierarchies are usually DIMENSION data —
+    * thousands of companies, not billions. When the edge list fits, the
+    * closure is a driver BFS over the collected edges with IDENTICAL
+    * semantics — per-path multiplicity, pair-level cycle guard against
+    * earlier depths. The driver result is capped at 10×`driverRows` rows
+    * (a dense DAG's path count can explode combinatorially); on breach
+    * the operator falls back to the distributed loop, which shares the
+    * blowup across executors.
     */
   def ancestorClosure(edges: DataFrame, maxDepth: Int = 20,
                       workDir: Option[String] = None,
-                      driverRows: Int = 100000): DataFrame = {
+                      driverRows: Int = DefaultDriverRows): DataFrame = {
     val spark = edges.sparkSession
     val cp = edges.select(col("child"), col("parent"))
-    val probe = cp.limit(driverRows + 1).collect()
-    if (probe.length <= driverRows) {
-      driverClosure(spark, edges.schema, probe, maxDepth, driverRows) match {
-        case Some(out) => return out
-        case None      => () // path-count blowup: distributed loop below
-      }
+    val probe = capProbe(cp, driverRows)
+    admitted(probe, driverRows).flatMap(driverClosure(spark, cp.schema, _,
+        maxDepth, driverRows)) match {
+      case Some(out) => return out
+      case None      => () // loop below
     }
-    // Small-edge-list fallback (driver BFS refused on path-count blowup):
-    // the full edge set is ALREADY on the driver — seed the loop from the
-    // collected rows instead of re-running the edges lineage, which may
-    // be an arbitrary upstream pipeline that the probe just paid for.
+    // Small-edge-list fallback (NULL ids, or the driver BFS refused on
+    // path-count blowup): the full edge set is ALREADY on the driver —
+    // seed the loop from the collected rows instead of re-running the
+    // edges lineage, which may be an arbitrary upstream pipeline that the
+    // probe just paid for.
     val src =
       if (probe.length <= driverRows)
         spark.createDataFrame(spark.sparkContext.parallelize(
@@ -265,11 +303,9 @@ object Graph {
     * 10×`driverRows` (combinatorial path blowup in a dense DAG) — the
     * caller then runs the distributed loop instead.
     */
-  private def driverClosure(spark: SparkSession,
-                            edgeSchema: org.apache.spark.sql.types.StructType,
-                            base: Array[org.apache.spark.sql.Row],
+  private def driverClosure(spark: SparkSession, edgeSchema: StructType,
+                            base: Array[Row],
                             maxDepth: Int, driverRows: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
     import scala.collection.mutable
     val parents = new java.util.HashMap[Any, mutable.ArrayBuffer[Any]]()
     base.foreach { r =>
@@ -299,15 +335,12 @@ object Graph {
       frontier = next
       depth += 1
     }
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val childF = edgeSchema("child")
-    val parentF = edgeSchema("parent")
-    val schema = StructType(Seq(
-      StructField("child", childF.dataType, childF.nullable),
-      StructField("ancestor", parentF.dataType, parentF.nullable),
-      StructField("depth", IntegerType, nullable = false)))
-    Some(spark.createDataFrame(out.asJava, schema))
+    // the loop's rounds land on parquet, which reads every column back
+    // nullable
+    Some(driverFrame(spark, out.toSeq,
+      StructField("child", edgeSchema("child").dataType, nullable = true),
+      StructField("ancestor", edgeSchema("parent").dataType, nullable = true),
+      StructField("depth", IntegerType, nullable = true)))
   }
 
   /** Scaled-integer PageRank — link authority for corpus weighting (the
@@ -335,12 +368,12 @@ object Graph {
     * a typical 5-10 iteration run executes as one job over the
     * materialized edge table, with exchange reuse across rounds.
     *
-    * Adaptive small-graph path (the [[ancestorClosure]] treatment):
-    * capped `limit(driverRows+1)` probes on edges and nodes decide in
-    * two early-terminating jobs; under the bound the loop runs as a
-    * driver tight loop over the collected graph — and because every
-    * step is order-independent integer arithmetic, the driver result
-    * is bit-identical to the distributed rounds (equality pinned in
+    * Adaptive small-graph path (the driver-or-distributed seam, see
+    * [[capProbe]]): capped probes on edges and nodes decide in two
+    * early-terminating jobs; under the bound the loop runs as a driver
+    * tight loop over the collected graph — and because every step is
+    * order-independent integer arithmetic, the driver result is
+    * bit-identical to the distributed rounds (equality pinned in
     * `GraphSpec`), with no blowup risk: rank state is exactly one long
     * per node per round.
     *
@@ -353,45 +386,9 @@ object Graph {
                      baseScaled: Long = 1000000000L,
                      workDir: Option[String] = None,
                      checkpointInterval: Int = 10,
-                     driverRows: Int = 100000): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val spark = edges.sparkSession
-    val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows) {
-      val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
-      if (nProbe.length <= driverRows)
-        return driverPageRank(spark, nodes.schema("node"), eProbe, nProbe,
-          iterations, baseScaled)
-    }
-    val store = new RoundStore(spark, workDir)
-    // materialize (src, dst, outdeg) once: every round joins against it
-    val e = store.save(
-      edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
-        .select(col("src"), col("dst"), col("outdeg")),
-      "edges")
-    val n = nodes.select(col("node"))
-    val baseShare = baseScaled * 15L / 100L
-    var ranks = n.withColumn("rank_scaled", lit(baseScaled))
-    for (i <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("rank_scaled div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-      val next = n.alias("n")
-        .join(contrib.alias("c"), col("n.node") === col("c.dst"), "left")
-        .select(col("n.node").as("node"),
-          (lit(baseShare) +
-            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("rank_scaled"))
-      ranks =
-        if (i % checkpointInterval == 0 && i < iterations)
-          store.save(next, s"ranks-$i")
-        else next
-    }
-    val out = store.save(ranks, "ranks")
-    store.cleanupExcept("ranks")
-    out
-  }
+                     driverRows: Int = DefaultDriverRows): DataFrame =
+    rankScaled(edges.select(col("src"), col("dst"), lit(1L).as("w")), nodes,
+      None, iterations, baseScaled, workDir, checkpointInterval, driverRows)
 
   /** Personalized PageRank, integer-scaled like [[pageRankScaled]]:
     * the teleport mass restarts at the SEED SET instead of uniformly —
@@ -406,12 +403,12 @@ object Graph {
     * 0 and are emitted (the caller filters if only the neighborhood
     * matters).
     *
-    * Adaptive small-graph path (the [[pageRankScaled]] treatment, which
-    * this operator was missing — r18 JobProfile measured 25 driver-
-    * synchronized jobs / 1.5 s wall with only 0.36 s of task time at
-    * sf0.1, i.e. the distributed rounds were pure scheduling overhead at
-    * gate scale): capped `limit(driverRows+1)` probes on edges, nodes
-    * and seeds; under the bound the rounds run as a driver tight loop —
+    * Adaptive small-graph path (the driver-or-distributed seam, see
+    * [[capProbe]] — r18 JobProfile measured 25 driver-synchronized jobs
+    * / 1.5 s wall with only 0.36 s of task time at sf0.1 before this
+    * operator had it, i.e. the distributed rounds were pure scheduling
+    * overhead at gate scale): capped probes on edges, nodes and seeds;
+    * under the bound the rounds run as a driver tight loop —
     * bit-identical to the distributed rounds because every step is
     * order-independent truncating integer arithmetic (equality pinned in
     * `GraphSpec`). Over the cap, the distributed loop is unchanged.
@@ -421,55 +418,9 @@ object Graph {
                                  baseScaled: Long = 1000000000L,
                                  workDir: Option[String] = None,
                                  checkpointInterval: Int = 10,
-                                 driverRows: Int = 100000): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    val spark = edges.sparkSession
-    val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows) {
-      val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
-      if (nProbe.length <= driverRows) {
-        val sProbe = seeds.select(col("node")).limit(driverRows + 1).collect()
-        if (sProbe.length <= driverRows)
-          return driverPersonalizedPageRank(spark, nodes.schema("node"),
-            eProbe, nProbe, sProbe, iterations, baseScaled)
-      }
-    }
-    val store = new RoundStore(spark, workDir)
-    val e = store.save(
-      edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
-        .select(col("src"), col("dst"), col("outdeg")),
-      "edges")
-    // seed membership rides the node table as a 0/1 flag — one narrow
-    // broadcast-or-shuffle join at build, reused by every round
-    val n = store.save(
-      nodes.select(col("node"))
-        .join(seeds.select(col("node")).distinct()
-          .withColumn("__seed", lit(1)), Seq("node"), "left")
-        .select(col("node"), coalesce(col("__seed"), lit(0)).as("__seed")),
-      "nodes")
-    val baseShare = baseScaled * 15L / 100L
-    var ranks = n.select(col("node"),
-      (col("__seed") * baseScaled).cast("long").as("rank_scaled"))
-    for (i <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("rank_scaled div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-      val next = n.alias("n")
-        .join(contrib.alias("c"), col("n.node") === col("c.dst"), "left")
-        .select(col("n.node").as("node"),
-          ((col("n.__seed") * baseShare).cast("long") +
-            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100"))
-            .as("rank_scaled"))
-      ranks =
-        if (i % checkpointInterval == 0 && i < iterations)
-          store.save(next, s"ranks-$i")
-        else next
-    }
-    val out = store.save(ranks, "ranks")
-    store.cleanupExcept("ranks")
-    out
-  }
+                                 driverRows: Int = DefaultDriverRows): DataFrame =
+    rankScaled(edges.select(col("src"), col("dst"), lit(1L).as("w")), nodes,
+      Some(seeds), iterations, baseScaled, workDir, checkpointInterval, driverRows)
 
   /** Edge-weighted PageRank: rank flows along each out-edge in
     * proportion to its weight — contribution = (rank·w) div Σw(src) —
@@ -490,82 +441,120 @@ object Graph {
                              baseScaled: Long = 1000000000L,
                              workDir: Option[String] = None,
                              checkpointInterval: Int = 10,
-                             driverRows: Int = 100000): DataFrame = {
+                             driverRows: Int = DefaultDriverRows): DataFrame =
+    rankScaled(edges.select(col("src"), col("dst"), col("w")), nodes,
+      None, iterations, baseScaled, workDir, checkpointInterval, driverRows)
+
+  /** The one integer PageRank kernel behind the three public rankers.
+    * `edges` is (src, dst, w): contribution = (rank·w) div Σw(src), so
+    * w = 1 is the unweighted `rank div outdeg`. Each node carries a seed
+    * flag f — 1 everywhere without `seeds`, else seed membership — and
+    * rank₀ = f·base, restart share = f·baseShare per round.
+    */
+  private def rankScaled(edges: DataFrame, nodes: DataFrame,
+                         seeds: Option[DataFrame], iterations: Int,
+                         baseScaled: Long, workDir: Option[String],
+                         checkpointInterval: Int, driverRows: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
+    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     val spark = edges.sparkSession
-    val eProbe = edges.select(col("src"), col("dst"), col("w"))
-      .limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows) {
-      val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
-      if (nProbe.length <= driverRows)
-        return driverWeightedPageRank(spark, nodes.schema("node"), eProbe,
-          nProbe, iterations, baseScaled)
+    val nodeIds = nodes.select(col("node"))
+    val seedIds = seeds.map(_.select(col("node")))
+    val onDriver = for {
+      eRows <- underCap(edges, driverRows)
+      nRows <- underCap(nodeIds, driverRows)
+      sRows <- seedIds match {
+        case Some(s) => underCap(s, driverRows).map(Some(_))
+        case None    => Some(None)
+      }
+    } yield driverRank(spark, nodes.schema("node"), eRows, nRows, sRows,
+      iterations, baseScaled)
+    onDriver.getOrElse {
+      val store = new RoundStore(spark, workDir)
+      // materialize (src, dst, w, sw) once: every round joins against it
+      val e = store.save(
+        edges.join(edges.groupBy(col("src")).agg(sum(col("w")).as("sw")), "src")
+          .select(col("src"), col("dst"), col("w"), col("sw")),
+        "edges")
+      // the seed flag rides the node table: a constant without seeds,
+      // else one narrow broadcast-or-shuffle join at build, reused by
+      // every round
+      val n = seedIds match {
+        case None => nodeIds.withColumn("__seed", lit(1))
+        case Some(s) => store.save(
+          nodeIds.join(s.distinct().withColumn("__seed", lit(1)), Seq("node"), "left")
+            .select(col("node"), coalesce(col("__seed"), lit(0)).as("__seed")),
+          "nodes")
+      }
+      val baseShare = baseScaled * 15L / 100L
+      var ranks = n.select(col("node"),
+        (col("__seed") * baseScaled).cast("long").as("rank_scaled"))
+      for (i <- 1 to iterations) {
+        val contrib = e
+          .join(ranks.withColumnRenamed("node", "src"), "src")
+          .select(col("dst"), expr("(rank_scaled * w) div sw").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
+        val next = n.alias("n")
+          .join(contrib.alias("c"), col("n.node") === col("c.dst"), "left")
+          .select(col("n.node").as("node"),
+            ((col("n.__seed") * baseShare).cast("long") +
+              expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100"))
+              .as("rank_scaled"))
+        ranks =
+          if (i % checkpointInterval == 0 && i < iterations)
+            store.save(next, s"ranks-$i")
+          else next
+      }
+      val out = store.save(ranks, "ranks")
+      store.cleanupExcept("ranks")
+      out
     }
-    val store = new RoundStore(spark, workDir)
-    val e = store.save(
-      edges.join(edges.groupBy(col("src")).agg(sum(col("w")).as("sw")), "src")
-        .select(col("src"), col("dst"), col("w"), col("sw")),
-      "edges")
-    val n = nodes.select(col("node"))
-    val baseShare = baseScaled * 15L / 100L
-    var ranks = n.withColumn("rank_scaled", lit(baseScaled))
-    for (i <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("(rank_scaled * w) div sw").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-      val next = n.alias("n")
-        .join(contrib.alias("c"), col("n.node") === col("c.dst"), "left")
-        .select(col("n.node").as("node"),
-          (lit(baseShare) +
-            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("rank_scaled"))
-      ranks =
-        if (i % checkpointInterval == 0 && i < iterations)
-          store.save(next, s"ranks-$i")
-        else next
-    }
-    val out = store.save(ranks, "ranks")
-    store.cleanupExcept("ranks")
-    out
   }
 
-  /** Driver twin of [[pageRankWeightedScaled]] — identical truncating
-    * steps, bit-equal by order-independence (pinned in GraphSpec). */
-  private def driverWeightedPageRank(spark: SparkSession,
-                                     nodeField: org.apache.spark.sql.types.StructField,
-                                     eRows: Array[org.apache.spark.sql.Row],
-                                     nRows: Array[org.apache.spark.sql.Row],
-                                     iterations: Int, baseScaled: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  /** Driver twin of [[rankScaled]]'s rounds: the same truncating integer
+    * steps in the same structure (contributions only from srcs that ARE
+    * nodes, destinations outside `nodes` dropped, seeds outside `nodes`
+    * ignored, restart share by seed flag) — exact equality with the
+    * distributed loop is an arithmetic fact, not an approximation,
+    * because no step depends on order.
+    *
+    * Precondition: `nodes` holds distinct, non-binary ids. The maps key
+    * on `Any`, so an `Array[Byte]` id compares by reference where the
+    * distributed equi-joins compare by value, and a duplicated node row
+    * is one map entry here but doubles its contributions in the
+    * distributed joins.
+    */
+  private def driverRank(spark: SparkSession, nodeField: StructField,
+                         eRows: Array[Row], nRows: Array[Row],
+                         sRows: Option[Array[Row]],
+                         iterations: Int, baseScaled: Long): DataFrame = {
+    def w(r: Row): Long = r.get(2).asInstanceOf[Number].longValue
     val sw = new java.util.HashMap[Any, Long]()
-    eRows.foreach(r => sw.merge(r.get(0), r.getLong(2), (a, b) => a + b))
+    eRows.foreach(r => sw.merge(r.get(0), w(r), (a, b) => a + b))
+    val seedSet = sRows.map(_.map(_.get(0)).toSet)
+    val flag = new java.util.HashMap[Any, Long]()
+    nRows.foreach(r =>
+      flag.put(r.get(0), if (seedSet.forall(_.contains(r.get(0)))) 1L else 0L))
     val baseShare = baseScaled * 15L / 100L
     var rank = new java.util.HashMap[Any, Long]()
-    nRows.foreach(r => rank.put(r.get(0), baseScaled))
+    nRows.foreach(r => rank.put(r.get(0), flag.get(r.get(0)) * baseScaled))
     for (_ <- 1 to iterations) {
       val contrib = new java.util.HashMap[Any, Long]()
       eRows.foreach { r =>
         val src = r.get(0)
+        // srcs that are not nodes carry no rank (inner join semantics)
         if (rank.containsKey(src))
-          contrib.merge(r.get(1),
-            rank.get(src) * r.getLong(2) / sw.get(src), (a, b) => a + b)
+          contrib.merge(r.get(1), rank.get(src) * w(r) / sw.get(src), (a, b) => a + b)
       }
       val next = new java.util.HashMap[Any, Long]()
       nRows.foreach { r =>
         val n = r.get(0)
-        next.put(n, baseShare + (85L * contrib.getOrDefault(n, 0L)) / 100L)
+        next.put(n, flag.get(n) * baseShare + (85L * contrib.getOrDefault(n, 0L)) / 100L)
       }
       rank = next
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = false)))
-    spark.createDataFrame(out.asJava, schema)
+    driverFrame(spark, nRows.toSeq.map(r => Row(r.get(0), rank.get(r.get(0)))),
+      nodeField, StructField("rank_scaled", LongType, nullable = true))
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999), integer-scaled for
@@ -595,20 +584,22 @@ object Graph {
                  scale: Long = 1000000L,
                  workDir: Option[String] = None,
                  checkpointInterval: Int = 10,
-                 driverRows: Int = 100000): DataFrame = {
+                 driverRows: Int = DefaultDriverRows): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val spark = edges.sparkSession
-    // adaptive small-graph path (the pageRankScaled treatment): capped
-    // probes decide in two early-terminating jobs; under the bound the
-    // rounds run as a driver tight loop — bit-identical to the
-    // distributed loop because every step is order-independent integer
-    // arithmetic (equality pinned in GraphSpec)
-    val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows) {
-      val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
-      if (nProbe.length <= driverRows)
-        return driverHits(spark, nodes.schema("node"), eProbe, nProbe,
-          iterations, scale)
+    // adaptive small-graph path (the driver-or-distributed seam, see
+    // [[capProbe]]): capped probes decide in two early-terminating jobs;
+    // under the bound the rounds run as a driver tight loop —
+    // bit-identical to the distributed loop because every step is
+    // order-independent integer arithmetic (equality pinned in GraphSpec)
+    val onDriver = for {
+      eRows <- underCap(edges.select(col("src"), col("dst")), driverRows)
+      nRows <- underCap(nodes.select(col("node")), driverRows)
+    } yield driverHits(spark, nodes.schema("node"), eRows, nRows,
+      iterations, scale)
+    onDriver match {
+      case Some(out) => return out
+      case None      => ()
     }
     val store = new RoundStore(spark, workDir)
     val n = nodes.select(col("node"))
@@ -664,13 +655,9 @@ object Graph {
     * distributed loop is an arithmetic fact (no step depends on
     * order), pinned in GraphSpec.
     */
-  private def driverHits(spark: SparkSession,
-                         nodeField: org.apache.spark.sql.types.StructField,
-                         eRows: Array[org.apache.spark.sql.Row],
-                         nRows: Array[org.apache.spark.sql.Row],
+  private def driverHits(spark: SparkSession, nodeField: StructField,
+                         eRows: Array[Row], nRows: Array[Row],
                          iterations: Int, scale: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
     val nodeSet = new java.util.HashSet[Any]()
     nRows.foreach(r => nodeSet.add(r.get(0)))
     val e = eRows.filter(r => nodeSet.contains(r.get(0)) && nodeSet.contains(r.get(1)))
@@ -700,121 +687,10 @@ object Graph {
         hubSum.merge(r.get(0), auths.getOrDefault(r.get(1), 0L), (a, b) => a + b))
       hubs = maxNorm(hubSum)
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    nRows.foreach(r => out += Row(r.get(0),
-      hubs.getOrDefault(r.get(0), 0L), auths.getOrDefault(r.get(0), 0L)))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("hub_scaled", LongType, nullable = false),
-      StructField("auth_scaled", LongType, nullable = false)))
-    spark.createDataFrame(out.asJava, schema)
-  }
-
-  /** Driver twin of [[pageRankScaled]]'s rounds: same integer steps in
-    * the same structure (contribution only for srcs that ARE nodes,
-    * destinations outside `nodes` dropped, base share for everyone) —
-    * exact equality with the distributed loop is an arithmetic fact,
-    * not an approximation, because no step depends on order.
-    */
-  private def driverPageRank(spark: SparkSession,
-                             nodeField: org.apache.spark.sql.types.StructField,
-                             eRows: Array[org.apache.spark.sql.Row],
-                             nRows: Array[org.apache.spark.sql.Row],
-                             iterations: Int, baseScaled: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
-    val outdeg = new java.util.HashMap[Any, Long]()
-    eRows.foreach(r => outdeg.merge(r.get(0), 1L, (a, b) => a + b))
-    val baseShare = baseScaled * 15L / 100L
-    var rank = new java.util.HashMap[Any, Long]()
-    nRows.foreach(r => rank.put(r.get(0), baseScaled))
-    for (_ <- 1 to iterations) {
-      val contrib = new java.util.HashMap[Any, Long]()
-      eRows.foreach { r =>
-        val src = r.get(0)
-        // srcs that are not nodes carry no rank (inner join semantics)
-        if (rank.containsKey(src))
-          contrib.merge(r.get(1), rank.get(src) / outdeg.get(src), (a, b) => a + b)
-      }
-      val next = new java.util.HashMap[Any, Long]()
-      nRows.foreach { r =>
-        val n = r.get(0)
-        val sc = contrib.getOrDefault(n, 0L)
-        next.put(n, baseShare + (85L * sc) / 100L)
-      }
-      rank = next
-    }
-    val out = mutable.ArrayBuffer.empty[Row]
-    nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = false)))
-    spark.createDataFrame(out.asJava, schema)
-  }
-
-  /** Driver twin of [[personalizedPageRankScaled]] — identical
-    * truncating steps and seed semantics (seed-only rank at round 0,
-    * restart share only on seeds, seeds outside the node set ignored),
-    * bit-equal by order-independence, same schema (both pinned in
-    * GraphSpec).
-    *
-    * Precondition: `nodes` holds distinct, non-binary ids. The maps key
-    * on `Any`, so an `Array[Byte]` id compares by reference where the
-    * distributed equi-joins compare by value, and a duplicated node row
-    * is one map entry here but doubles its contributions in the
-    * distributed joins. */
-  private def driverPersonalizedPageRank(spark: SparkSession,
-                                         nodeField: org.apache.spark.sql.types.StructField,
-                                         eRows: Array[org.apache.spark.sql.Row],
-                                         nRows: Array[org.apache.spark.sql.Row],
-                                         sRows: Array[org.apache.spark.sql.Row],
-                                         iterations: Int, baseScaled: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
-    val outdeg = new java.util.HashMap[Any, Long]()
-    eRows.foreach(r => outdeg.merge(r.get(0), 1L, (a, b) => a + b))
-    // the distributed build left-joins distinct seeds onto the node set:
-    // membership is a 0/1 flag, seeds not in `nodes` never materialize,
-    // and a NULL seed value can never flag a node (equi-join semantics)
-    val seedSet = new java.util.HashSet[Any]()
-    sRows.foreach(r => if (!r.isNullAt(0)) seedSet.add(r.get(0)))
-    val baseShare = baseScaled * 15L / 100L
-    var rank = new java.util.HashMap[Any, Long]()
-    nRows.foreach(r =>
-      rank.put(r.get(0), if (seedSet.contains(r.get(0))) baseScaled else 0L))
-    for (_ <- 1 to iterations) {
-      val contrib = new java.util.HashMap[Any, Long]()
-      eRows.foreach { r =>
-        val src = r.get(0)
-        // srcs that are not nodes carry no rank, and a NULL src or dst
-        // never matches in the distributed equi-joins
-        if (src != null && !r.isNullAt(1) && rank.containsKey(src))
-          contrib.merge(r.get(1), rank.get(src) / outdeg.get(src), (a, b) => a + b)
-      }
-      val next = new java.util.HashMap[Any, Long]()
-      nRows.foreach { r =>
-        val n = r.get(0)
-        // a NULL node can neither be flagged as a seed nor receive
-        // contributions (both distributed joins are null-dropping)
-        val seedShare = if (n != null && seedSet.contains(n)) baseShare else 0L
-        val sc = if (n == null) 0L else contrib.getOrDefault(n, 0L)
-        next.put(n, seedShare + (85L * sc) / 100L)
-      }
-      rank = next
-    }
-    val out = mutable.ArrayBuffer.empty[Row]
-    nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("node", nodeField.dataType, nodeField.nullable),
-      // nullable, as the distributed path returns it
-      StructField("rank_scaled", LongType, nullable = true)))
-    spark.createDataFrame(out.asJava, schema)
+    driverFrame(spark, nRows.toSeq.map(r => Row(r.get(0),
+        hubs.getOrDefault(r.get(0), 0L), auths.getOrDefault(r.get(0), 0L))),
+      nodeField, StructField("hub_scaled", LongType, nullable = true),
+      StructField("auth_scaled", LongType, nullable = true))
   }
 
   /** Connected components by iterative min-label propagation: every node
@@ -847,7 +723,7 @@ object Graph {
                           extraNodes: Option[DataFrame] = None,
                           workDir: Option[String] = None,
                           checkpointInterval: Int = 2,
-                          driverRows: Int = 100000): DataFrame = {
+                          driverRows: Int = DefaultDriverRows): DataFrame = {
     val spark = edges.sparkSession
     // write-then-read materialization: one job computes and lands the
     // round on reliable storage; downstream rounds read the files
@@ -860,8 +736,8 @@ object Graph {
     // symmetric orientation itself is a narrow re-read of the files, not
     // worth a second table.
     val e0 = save(edges.select(col("src"), col("dst")), "edges")
-    // Adaptive small-graph path (the ancestorClosure treatment): the
-    // probe reads the MATERIALIZED edge table — a capped file read, so
+    // Adaptive small-graph path (the driver-or-distributed seam, see
+    // [[capProbe]]): the probe reads the MATERIALIZED edge table — a capped file read, so
     // the upstream pair pipeline is never recomputed on either path.
     // Near-dup edge sets are usually tiny relative to the corpus (most
     // docs are singletons, handled by the scale-safe anti-join below
@@ -869,21 +745,14 @@ object Graph {
     // dominate. Components are a SET property — driver union-find gives
     // exactly the (node, min-id) labels the rounds converge to. Long
     // ids only: the loop itself is long-typed (the prev column).
-    val driverOut: Option[DataFrame] =
-      if (driverRows > 0 &&
-          e0.schema("src").dataType == org.apache.spark.sql.types.LongType &&
-          e0.schema("dst").dataType == org.apache.spark.sql.types.LongType) {
-        val probe = e0.limit(driverRows + 1).collect()
-        // null endpoints are outside the pair contract: keep the loop's
-        // behavior for them instead of silently diverging
-        if (probe.length <= driverRows &&
-            !probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-          val out = driverComponents(spark, probe, e0.schema("src").nullable)
-          store.cleanupExcept()
-          Some(out)
-        } else None
-      } else None
-    driverOut match {
+    val longIds = driverRows > 0 &&
+      Seq(e0.schema("src"), e0.schema("dst")).forall(_.dataType == LongType)
+    val onDriver = (if (longIds) underCap(e0, driverRows) else None).map { rows =>
+      val out = driverComponents(spark, rows, e0.schema("src").nullable)
+      store.cleanupExcept()
+      out
+    }
+    onDriver match {
       case Some(out) => return appendSingletons(out, extraNodes)
       case None      => ()
     }
@@ -954,11 +823,8 @@ object Graph {
     * per root — the exact fixpoint min-label converges to, computed as
     * a set property rather than iterated.
     */
-  private def driverComponents(spark: SparkSession,
-                               edgeRows: Array[org.apache.spark.sql.Row],
+  private def driverComponents(spark: SparkSession, edgeRows: Array[Row],
                                nullableIds: Boolean): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
     val parent = new java.util.HashMap[Long, Long]()
     def find(x0: Long): Long = {
       var x = x0
@@ -980,16 +846,9 @@ object Graph {
     parent.keySet().forEach { n =>
       minOf.merge(find(n), n, (a, b) => math.min(a, b))
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    parent.keySet().forEach { n =>
-      out += Row(n, minOf.get(find(n)))
-    }
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
+    driverFrame(spark, parent.keySet().asScala.toSeq.map(n => Row(n, minOf.get(find(n)))),
       StructField("node", LongType, nullableIds),
-      StructField("component", LongType, nullableIds)))
-    spark.createDataFrame(out.asJava, schema)
+      StructField("component", LongType, nullableIds))
   }
 
   /** Incremental connected components: fold a previous run's
@@ -1100,6 +959,18 @@ object Graph {
   def withRelationshipId(df: DataFrame, headKey: Column, tailKey: Column): DataFrame =
     df.withColumn("relationship_id", relationshipId(headKey, tailKey))
 
+  /** Canonical undirected-distinct edges (u < v), self-loops dropped —
+    * the first step of every undirected operator below. Each caller
+    * keeps its own materialization (named checkpoint or localCheckpoint).
+    */
+  private def canonicalEdges(edges: DataFrame, srcCol: String,
+                             dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+
   /** Per-vertex triangle counts by the degree-ordered compact-forward
     * algorithm (Latapy 2008; the cohesion/clustering-coefficient
     * numerator). Edges canonicalize to undirected-distinct first, then
@@ -1129,11 +1000,7 @@ object Graph {
     // dominant cost at bench scale and re-deriving the input up to the
     // exchange-reuse cap at any scale. Same bet as [[bfsHops]]' frontier
     // checkpoints: a lost block fails the job and the caller retries.
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol)
       .checkpointAt("Graph.triangleCounts.canon")
     val deg = canon.select(col("u").as("x"))
       .union(canon.select(col("v").as("x")))
@@ -1184,7 +1051,7 @@ object Graph {
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               seeds: DataFrame, seedCol: String, maxHops: Int,
-              driverRows: Int = 100000): DataFrame = {
+              driverRows: Int = DefaultDriverRows): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
     // adjacency materialized once (eager, lineage truncated): every
     // round's frontier join references it, so without truncation the
@@ -1197,22 +1064,24 @@ object Graph {
       .distinct()
       .checkpointAt("Graph.bfsHops.adj")
     val seedSet = seeds.select(col(seedCol).as("vertex")).distinct()
-    // Adaptive small-graph path (the connectedComponents/pageRank
-    // treatment): capped probes on the MATERIALIZED adjacency and the
+    // Adaptive small-graph path (the driver-or-distributed seam, see
+    // [[capProbe]]): capped probes on the MATERIALIZED adjacency and the
     // seed set; under the cap the layered expansion runs as a driver
     // tight loop. Level-order BFS assigns each vertex its minimum hop
     // — exactly what min-over-layers converges to — so the driver
     // result is row-identical (equality pinned in GraphSpec). Null ids
     // or non-long ids fall back to the distributed loop unchanged.
-    if (adj.schema("a").dataType == org.apache.spark.sql.types.LongType) {
-      val eProbe = adj.limit(driverRows + 1).collect()
-      if (eProbe.length <= driverRows &&
-          !eProbe.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val sProbe = seedSet.limit(driverRows + 1).collect()
-        if (sProbe.length <= driverRows && !sProbe.exists(_.isNullAt(0)))
-          return driverBfsHops(edges.sparkSession,
-            seedSet.schema("vertex"), eProbe, sProbe, maxHops)
-      }
+    val longIds = Seq(adj.schema("a"), seedSet.schema("vertex"))
+      .forall(_.dataType == LongType)
+    val onDriver = for {
+      eRows <- if (longIds) underCap(adj, driverRows) else None
+      sRows <- underCap(seedSet, driverRows)
+    } yield driverBfsHops(edges.sparkSession,
+      seedSet.schema("vertex").nullable || (maxHops > 0 && adj.schema("b").nullable),
+      eRows, sRows, maxHops)
+    onDriver match {
+      case Some(out) => return out
+      case None      => ()
     }
     var frontier = seedSet.localCheckpoint(true)
     val layers = scala.collection.mutable.ArrayBuffer(
@@ -1227,12 +1096,11 @@ object Graph {
       .groupBy(col("vertex")).agg(min(col("hop")).as("hop"))
   }
 
-  private def driverBfsHops(spark: SparkSession,
-                            vertexField: org.apache.spark.sql.types.StructField,
-                            eRows: Array[org.apache.spark.sql.Row],
-                            sRows: Array[org.apache.spark.sql.Row],
+  /** Driver twin of [[bfsHops]]' layers; `nullableVertex` is the
+    * loop's: its hop layers union the seeds with adjacency endpoints. */
+  private def driverBfsHops(spark: SparkSession, nullableVertex: Boolean,
+                            eRows: Array[Row], sRows: Array[Row],
                             maxHops: Int): DataFrame = {
-    import org.apache.spark.sql.Row
     import scala.collection.mutable
     val adj = new java.util.HashMap[Long, mutable.ArrayBuffer[Long]]()
     eRows.foreach { r =>
@@ -1257,13 +1125,9 @@ object Graph {
       frontier = next
       h += 1
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    hop.forEach((v, d) => out += Row(v, d))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("hop", LongType, nullable = false))))
+    driverFrame(spark, hop.asScala.toSeq.map { case (v, d) => Row(v, d) },
+      StructField("vertex", LongType, nullableVertex),
+      StructField("hop", LongType, nullable = true))
   }
 
   /** Bounded single/multi-source shortest paths over an undirected
@@ -1282,7 +1146,7 @@ object Graph {
     */
   def ssspBounded(edges: DataFrame, srcCol: String, dstCol: String,
                   weightCol: String, seeds: DataFrame, seedCol: String,
-                  maxHops: Int, driverRows: Int = 100000): DataFrame = {
+                  maxHops: Int, driverRows: Int = DefaultDriverRows): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
     // adjacency materialized once — see [[bfsHops]]: each relaxation
     // round re-joins it, so truncation stops the per-round replay of
@@ -1296,25 +1160,23 @@ object Graph {
       .groupBy(col("a"), col("b")).agg(min(col("w")).as("w"))
       .checkpointAt("Graph.ssspBounded.adj")
     val seedSet = seeds.select(col(seedCol).as("vertex")).distinct()
-    // Adaptive small-graph path (the bfsHops treatment): the driver
-    // twin runs the SAME maxHops synchronous relaxation rounds over
-    // the collected min-collapsed adjacency — each round is
-    // labels := min(labels, labels+edge) exactly like the distributed
-    // union+min — so bounded-walk costs are bit-identical (GraphSpec).
-    // Long ids/weights only; nulls fall back.
-    locally {
-      import org.apache.spark.sql.types.LongType
-      if (adj.schema("a").dataType == LongType &&
-          adj.schema("w").dataType == LongType) {
-        val eProbe = adj.limit(driverRows + 1).collect()
-        if (eProbe.length <= driverRows &&
-            !eProbe.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) {
-          val sProbe = seedSet.limit(driverRows + 1).collect()
-          if (sProbe.length <= driverRows && !sProbe.exists(_.isNullAt(0)))
-            return driverSsspBounded(edges.sparkSession,
-              seedSet.schema("vertex"), eProbe, sProbe, maxHops)
-        }
-      }
+    // Adaptive small-graph path (the driver-or-distributed seam, see
+    // [[capProbe]]): the driver twin runs the SAME maxHops synchronous
+    // relaxation rounds over the collected min-collapsed adjacency —
+    // each round is labels := min(labels, labels+edge) exactly like the
+    // distributed union+min — so bounded-walk costs are bit-identical
+    // (GraphSpec). Long ids/weights only; nulls fall back.
+    val longIds = Seq(adj.schema("a"), adj.schema("w"), seedSet.schema("vertex"))
+      .forall(_.dataType == LongType)
+    val onDriver = for {
+      eRows <- if (longIds) underCap(adj, driverRows) else None
+      sRows <- underCap(seedSet, driverRows)
+    } yield driverSsspBounded(edges.sparkSession,
+      seedSet.schema("vertex").nullable || (maxHops > 0 && adj.schema("b").nullable),
+      eRows, sRows, maxHops)
+    onDriver match {
+      case Some(out) => return out
+      case None      => ()
     }
     var labels = seedSet
       .withColumn("cost", lit(0L))
@@ -1329,12 +1191,11 @@ object Graph {
     labels
   }
 
-  private def driverSsspBounded(spark: SparkSession,
-                                vertexField: org.apache.spark.sql.types.StructField,
-                                eRows: Array[org.apache.spark.sql.Row],
-                                sRows: Array[org.apache.spark.sql.Row],
+  /** Driver twin of [[ssspBounded]]'s rounds; `nullableVertex` is the
+    * loop's: each round unions in adjacency endpoints. */
+  private def driverSsspBounded(spark: SparkSession, nullableVertex: Boolean,
+                                eRows: Array[Row], sRows: Array[Row],
                                 maxHops: Int): DataFrame = {
-    import org.apache.spark.sql.Row
     import scala.collection.mutable
     val adj = new java.util.HashMap[Long, mutable.ArrayBuffer[(Long, Long)]]()
     eRows.foreach { r =>
@@ -1354,13 +1215,11 @@ object Graph {
       }
       cost = next
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    cost.forEach((v, c) => out += Row(v, c))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("cost", LongType, nullable = false))))
+    // the loop's min aggregate is nullable; zero rounds keep the seeds'
+    // literal 0 cost
+    driverFrame(spark, cost.asScala.toSeq.map { case (v, c) => Row(v, c) },
+      StructField("vertex", LongType, nullableVertex),
+      StructField("cost", LongType, nullable = maxHops > 0))
   }
 
   /** Common-neighbor link prediction: for every NON-adjacent canonical
@@ -1388,11 +1247,7 @@ object Graph {
     // table and the non-adjacency anti-join — without truncation the
     // caller's edge subtree is replicated ~7x in the plan (108 scans /
     // 140 Exchanges measured r17)
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol)
       .checkpointAt("Graph.commonNeighbors.canon")
     // full adjacency (both directions) for wedges and degrees
     val adj = canon.select(col("u").as("a"), col("v").as("b"))
@@ -1433,11 +1288,7 @@ object Graph {
                          minCommon: Long = 2L): DataFrame = {
     // eager materialization — see [[triangleCounts]] (84 duplicated
     // scans / 108 Exchanges measured r17 without it)
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol)
       .checkpointAt("Graph.resourceAllocation.canon")
     val adj = canon.select(col("u").as("a"), col("v").as("b"))
       .union(canon.select(col("v").as("a"), col("u").as("b")))
@@ -1475,30 +1326,25 @@ object Graph {
     * retries) so round r's plan reads round r−1's blocks.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int, driverRows: Int = 100000): DataFrame = {
+                       rounds: Int, driverRows: Int = DefaultDriverRows): DataFrame = {
     require(rounds >= 1, "rounds must be positive")
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol)
     // adjacency materialized once — see [[bfsHops]]: every propagation
     // round joins it, so truncation stops the per-round replay of the
     // canon distinct and the caller's edge derivation
     val adj = canon.select(col("u").as("a"), col("v").as("b"))
       .union(canon.select(col("v").as("a"), col("u").as("b")))
       .checkpointAt("Graph.labelPropagation.adj")
-    // Adaptive small-graph path (the bfsHops treatment): the driver
-    // twin runs the SAME synchronous rounds — every vertex adopts the
-    // mode label among its neighbors, ties to the smallest label — so
-    // the converging assignment is row-identical (GraphSpec). Long ids
-    // only; nulls fall back.
-    if (adj.schema("a").dataType == org.apache.spark.sql.types.LongType) {
-      val eProbe = adj.limit(driverRows + 1).collect()
-      if (eProbe.length <= driverRows &&
-          !eProbe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return driverLabelPropagation(edges.sparkSession,
-          adj.schema("a"), eProbe, rounds)
+    // Adaptive small-graph path (the driver-or-distributed seam, see
+    // [[capProbe]]): the driver twin runs the SAME synchronous rounds —
+    // every vertex adopts the mode label among its neighbors, ties to
+    // the smallest label — so the converging assignment is row-identical
+    // (GraphSpec). Long ids only; nulls fall back.
+    val longIds = adj.schema("a").dataType == LongType
+    (if (longIds) underCap(adj, driverRows) else None).map(rows =>
+        driverLabelPropagation(edges.sparkSession, adj.schema("b"), rows, rounds)) match {
+      case Some(out) => return out
+      case None      => ()
     }
     var labels = adj.select(col("a").as("vertex")).distinct()
       .withColumn("label", col("vertex"))
@@ -1516,11 +1362,8 @@ object Graph {
     labels
   }
 
-  private def driverLabelPropagation(spark: SparkSession,
-                                     vertexField: org.apache.spark.sql.types.StructField,
-                                     eRows: Array[org.apache.spark.sql.Row],
-                                     rounds: Int): DataFrame = {
-    import org.apache.spark.sql.Row
+  private def driverLabelPropagation(spark: SparkSession, vertexField: StructField,
+                                     eRows: Array[Row], rounds: Int): DataFrame = {
     import scala.collection.mutable
     val adj = new java.util.HashMap[Long, mutable.ArrayBuffer[Long]]()
     eRows.foreach { r =>
@@ -1548,13 +1391,11 @@ object Graph {
       }
       labels = next
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    labels.forEach((v, l) => out += Row(v, l))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{StructField, StructType}
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("label", vertexField.dataType, vertexField.nullable))))
+    // the loop's vertex is the adjacency's `b` side; its label comes out
+    // of a nullable min_by
+    driverFrame(spark, labels.asScala.toSeq.map { case (v, l) => Row(v, l) },
+      vertexField.copy(name = "vertex"),
+      StructField("label", vertexField.dataType, nullable = true))
   }
 
   /** Bounded k-core peeling: `rounds` synchronous rounds of "drop every
@@ -1577,24 +1418,18 @@ object Graph {
     * instead of replaying the whole prefix.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Long, rounds: Int, driverRows: Int = 100000): DataFrame = {
+            k: Long, rounds: Int, driverRows: Int = DefaultDriverRows): DataFrame = {
     require(rounds >= 1, "rounds must be positive")
-    var live = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
-    // Adaptive small-graph path (the bfsHops treatment): the driver
-    // twin peels the SAME `rounds` synchronous rounds over the
-    // collected canonical edge set (GraphSpec pins equality). Long ids
-    // only; nulls fall back.
-    if (live.schema("u").dataType == org.apache.spark.sql.types.LongType) {
-      val eProbe = live.limit(driverRows + 1).collect()
-      if (eProbe.length <= driverRows &&
-          !eProbe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return driverKCore(edges.sparkSession, live.schema("u"),
-          eProbe, k, rounds)
+    var live = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(true)
+    // Adaptive small-graph path (the driver-or-distributed seam, see
+    // [[capProbe]]): the driver twin peels the SAME `rounds` synchronous
+    // rounds over the collected canonical edge set (GraphSpec pins
+    // equality). Long ids only; nulls fall back.
+    val longIds = live.schema("u").dataType == LongType
+    (if (longIds) underCap(live, driverRows) else None).map(rows =>
+        driverKCore(edges.sparkSession, live.schema("u"), rows, k, rounds)) match {
+      case Some(out) => return out
+      case None      => ()
     }
     for (_ <- 1 to rounds) {
       val deg = live.select(col("u").as("x"))
@@ -1612,11 +1447,8 @@ object Graph {
       .groupBy(col("x").as("vertex")).agg(count(lit(1)).as("core_deg"))
   }
 
-  private def driverKCore(spark: SparkSession,
-                          vertexField: org.apache.spark.sql.types.StructField,
-                          eRows: Array[org.apache.spark.sql.Row],
-                          k: Long, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.Row
+  private def driverKCore(spark: SparkSession, vertexField: StructField,
+                          eRows: Array[Row], k: Long, rounds: Int): DataFrame = {
     import scala.collection.mutable
     var live = mutable.ArrayBuffer.empty[(Long, Long)]
     eRows.foreach(r => live += ((r.getLong(0), r.getLong(1))))
@@ -1631,12 +1463,8 @@ object Graph {
     live.foreach { case (u, v) =>
       deg.merge(u, 1L, (x, y) => x + y); deg.merge(v, 1L, (x, y) => x + y)
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    deg.forEach((v, d) => out += Row(v, d))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("core_deg", LongType, nullable = false))))
+    driverFrame(spark, deg.asScala.toSeq.map { case (v, d) => Row(v, d) },
+      vertexField.copy(name = "vertex"),
+      StructField("core_deg", LongType, nullable = false))
   }
 }

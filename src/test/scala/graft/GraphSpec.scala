@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Clean, Graph}
 import graft.schema.TmdbCorpus
@@ -52,11 +53,11 @@ class GraphSpec extends SparkTestBase {
     ).toDF("child", "parent")
     def sorted(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val driver = Graph.ancestorClosure(edges) // under threshold
-    val dist = Graph.ancestorClosure(edges, driverRows = 0) // force loop
-    assert(sorted(driver) == sorted(dist))
+    assertTwins(TwinGraph("diamond",
+      edges.select(col("child").as("src"), col("parent").as("dst"))),
+      "ancestorClosure")
     // per-path multiplicity preserved: (1, 4, 2) appears twice
-    assert(sorted(driver).count(_ == (1L, 4L, 2)) == 2)
+    assert(sorted(Graph.ancestorClosure(edges)).count(_ == (1L, 4L, 2)) == 2)
   }
 
   test("J4: recursive-CTE idiom agrees with the iterative closure") {
@@ -110,11 +111,8 @@ class GraphSpec extends SparkTestBase {
     // arithmetic is order-independent), incl. a non-node destination
     // and a non-node source that must carry no rank
     val messy = Seq((1L, 2L), (1L, 99L), (98L, 1L), (2L, 1L)).toDF("src", "dst")
-    val mn = Seq(1L, 2L, 3L).toDF("node")
-    def ranksOf(driverRows: Int) =
-      Graph.pageRankScaled(messy, mn, iterations = 3, driverRows = driverRows)
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
-    assert(ranksOf(100000) == ranksOf(0))
+    assertTwins(TwinGraph("pagerank-messy", messy,
+      Seq(1L, 2L, 3L).toDF("node")), "pageRankScaled")
   }
 
   test("pageRankWeightedScaled: weights steer the flow; driver == distributed") {
@@ -139,10 +137,7 @@ class GraphSpec extends SparkTestBase {
     // driver fast path == distributed rounds bit for bit
     val big = Seq((1L, 2L, 5L), (2L, 3L, 2L), (3L, 1L, 7L), (1L, 3L, 1L))
       .toDF("src", "dst", "w")
-    def of(driverRows: Int) =
-      Graph.pageRankWeightedScaled(big, n, iterations = 3, driverRows = driverRows)
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
-    assert(of(100000) == of(0))
+    assertTwins(TwinGraph("weighted-big", big, n), "pageRankWeightedScaled")
   }
 
   test("personalizedPageRankScaled: seed restart by hand; driver == distributed") {
@@ -162,14 +157,8 @@ class GraphSpec extends SparkTestBase {
     // destinations drop
     val messy = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 99L), (98L, 2L))
       .toDF("src", "dst")
-    val seeds = Seq(1L, 1L, 3L, 77L).toDF("node")
-    def run(driverRows: Int) =
-      Graph.personalizedPageRankScaled(messy, n, seeds, iterations = 3,
-        driverRows = driverRows)
-    def of(driverRows: Int) =
-      run(driverRows).collect().map(x => (x.getLong(0), x.getLong(1))).toMap
-    assert(of(100000) == of(0))
-    assert(run(100000).schema == run(0).schema)
+    assertTwins(TwinGraph("ppr-messy", messy, n,
+      Seq(1L, 1L, 3L, 77L).toDF("node")), "personalizedPageRankScaled")
   }
 
   test("hitsScaled: star graph by hand, checkpoint invariance, edgeless zeros") {
@@ -200,10 +189,7 @@ class GraphSpec extends SparkTestBase {
     // driver fast path == distributed rounds bit for bit, incl. edges
     // with a non-node endpoint (dropped on both paths)
     val messy = e.union(Seq((1L, 99L), (98L, 2L)).toDF("src", "dst"))
-    def hitsOf(driverRows: Int) =
-      Graph.hitsScaled(messy, n, iterations = 2, driverRows = driverRows)
-        .collect().map(x => (x.getLong(0), (x.getLong(1), x.getLong(2)))).toMap
-    assert(hitsOf(100000) == hitsOf(0))
+    assertTwins(TwinGraph("hits-messy", messy, n), "hitsScaled")
   }
 
   test("resourceAllocation: hand-computed hub discount, adjacency excluded") {
@@ -385,30 +371,16 @@ class GraphSpec extends SparkTestBase {
       (2L, 1L), (1L, 2L),                     // duplicates/reversed
       (7L, 8L)                                // separate component
     ).toDF("src", "dst")
-    val seeds = Seq(1L, 42L).toDF("n") // 42 is not in the graph
-    def bfs(driverRows: Int) =
-      Graph.bfsHops(edges, "src", "dst", seeds, "n", maxHops = 3,
-        driverRows = driverRows).as[(Long, Long)].collect().toMap
-    assert(bfs(100000) == bfs(0))
+    val seeds = Seq(1L, 42L).toDF("node") // 42 is not in the graph
+    assertTwins(TwinGraph("bounded", edges, seeds = seeds),
+      "bfsHops", "labelPropagation", "kCore")
 
     val wedges = Seq(
       (1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 1L), (4L, 1L, 10L),
       (1L, 3L, 7L), (1L, 3L, 5L) // parallel edges, min collapses
     ).toDF("src", "dst", "w")
-    def sssp(driverRows: Int) =
-      Graph.ssspBounded(wedges, "src", "dst", "w", seeds, "n", maxHops = 3,
-        driverRows = driverRows).as[(Long, Long)].collect().toMap
-    assert(sssp(100000) == sssp(0))
-
-    def lp(driverRows: Int) =
-      Graph.labelPropagation(edges, "src", "dst", rounds = 3,
-        driverRows = driverRows).as[(Long, Long)].collect().toMap
-    assert(lp(100000) == lp(0))
-
-    def core(driverRows: Int) =
-      Graph.kCore(edges, "src", "dst", k = 2L, rounds = 3,
-        driverRows = driverRows).as[(Long, Long)].collect().toMap
-    assert(core(100000) == core(0))
+    assertTwins(TwinGraph("bounded-weighted", wedges, seeds = seeds),
+      "ssspBounded")
 
     // null ids must take the distributed loop, not NPE in the twin
     val withNull = Seq((Some(1L), Some(2L)), (None, Some(3L)))
@@ -416,6 +388,144 @@ class GraphSpec extends SparkTestBase {
     val nOut = Graph.bfsHops(withNull, "src", "dst", Seq(1L).toDF("n"), "n",
       maxHops = 2).as[(Long, Long)].collect().toMap
     assert(nOut == Map(1L -> 0L, 2L -> 1L))
+  }
+
+  // ---- the twin table: every driver twin against its distributed loop ----
+
+  /** A twin-table input: (src, dst[, w]) edges — the closure reads them
+    * as (child, parent), a missing `w` is 1 — plus a node and a seed set.
+    */
+  private case class TwinGraph(label: String, edges: DataFrame,
+                               nodes: DataFrame = Seq.empty[Long].toDF("node"),
+                               seeds: DataFrame = Seq.empty[Long].toDF("node")) {
+    def src: DataFrame = edges.select(col("src"), col("dst"))
+    def weighted: DataFrame =
+      if (edges.columns.contains("w")) edges.select(col("src"), col("dst"), col("w"))
+      else edges.select(col("src"), col("dst"), lit(1L).as("w"))
+  }
+
+  /** The ten adaptive operators (BFS and SSSP also at zero hops), each
+    * run at a given `driverRows`. */
+  private val twins: Seq[(String, (TwinGraph, Int) => DataFrame)] = Seq(
+    "ancestorClosure" -> ((g, cap) => Graph.ancestorClosure(
+      g.src.select(col("src").as("child"), col("dst").as("parent")),
+      driverRows = cap)),
+    "pageRankScaled" -> ((g, cap) =>
+      Graph.pageRankScaled(g.src, g.nodes, iterations = 3, driverRows = cap)),
+    "pageRankWeightedScaled" -> ((g, cap) => Graph.pageRankWeightedScaled(
+      g.weighted, g.nodes, iterations = 3, driverRows = cap)),
+    "personalizedPageRankScaled" -> ((g, cap) =>
+      Graph.personalizedPageRankScaled(g.src, g.nodes, g.seeds,
+        iterations = 3, driverRows = cap)),
+    "hitsScaled" -> ((g, cap) =>
+      Graph.hitsScaled(g.src, g.nodes, iterations = 2, driverRows = cap)),
+    "connectedComponents" -> ((g, cap) =>
+      Graph.connectedComponents(g.src, maxIter = 50, driverRows = cap)),
+    "bfsHops" -> ((g, cap) => Graph.bfsHops(g.src, "src", "dst", g.seeds,
+      "node", maxHops = 3, driverRows = cap)),
+    "ssspBounded" -> ((g, cap) => Graph.ssspBounded(g.weighted, "src", "dst",
+      "w", g.seeds, "node", maxHops = 3, driverRows = cap)),
+    // zero hops: the loops return the seeds alone, so their schema
+    // follows the seed column, not the adjacency
+    "bfsHops/0" -> ((g, cap) => Graph.bfsHops(g.src, "src", "dst", g.seeds,
+      "node", maxHops = 0, driverRows = cap)),
+    "ssspBounded/0" -> ((g, cap) => Graph.ssspBounded(g.weighted, "src", "dst",
+      "w", g.seeds, "node", maxHops = 0, driverRows = cap)),
+    "labelPropagation" -> ((g, cap) => Graph.labelPropagation(g.src, "src",
+      "dst", rounds = 3, driverRows = cap)),
+    "kCore" -> ((g, cap) => Graph.kCore(g.src, "src", "dst", k = 2L,
+      rounds = 3, driverRows = cap)))
+
+  private def fieldsOf(df: DataFrame): String =
+    df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}:" +
+      (if (f.nullable) "nullable" else "non-null")).mkString(", ")
+
+  /** Every way the named operators' driver twins (default cap) differ
+    * from their distributed loops (`driverRows = 0`) on `g`: schema
+    * (nullability included), the row multiset, or a throw on either side.
+    */
+  private def twinMismatches(g: TwinGraph, names: Seq[String]): Seq[String] =
+    twins.filter(t => names.contains(t._1)).flatMap { case (name, run) =>
+      def rows(df: DataFrame) = df.collect().map(_.mkString("|")).toSeq.sorted
+      scala.util.Try {
+        val driver = run(g, Graph.DefaultDriverRows)
+        val loop = run(g, 0)
+        Seq(
+          Option.when(driver.schema != loop.schema)(
+            s"schema: driver [${fieldsOf(driver)}] vs loop [${fieldsOf(loop)}]"),
+          Option.when(rows(driver) != rows(loop))(
+            s"values: only driver ${rows(driver).diff(rows(loop))}, " +
+              s"only loop ${rows(loop).diff(rows(driver))}")).flatten
+      }.fold(e => Seq(s"threw ${e.getClass.getSimpleName}: " +
+          String.valueOf(e.getMessage).linesIterator.next()), identity)
+        .map(m => s"${g.label}/$name: $m")
+    }
+
+  private def assertTwins(g: TwinGraph, names: String*): Unit = {
+    val mismatches = twinMismatches(g, names)
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
+  }
+
+  /** A seeded random graph over nodes 0..9: endpoints reach 10 and 11
+    * (not nodes), self-loops may occur, and one duplicate plus one
+    * reversed edge are appended. `nullable` builds Option edge and node
+    * columns;
+    * `nullIds` adds a NULL src, a NULL dst, a NULL node and a NULL seed;
+    * `nullWeight` adds one edge with a NULL weight.
+    */
+  private def randomTwinGraph(seed: Int, nullable: Boolean,
+                              nullIds: Boolean = false,
+                              nullWeight: Boolean = false): TwinGraph = {
+    val rng = new scala.util.Random(seed)
+    val n = 10
+    val drawn = Seq.fill(20)((rng.nextInt(n + 2).toLong,
+      rng.nextInt(n + 2).toLong, 1L + rng.nextInt(4)))
+    val es = drawn :+ drawn.head :+ ((drawn(1)._2, drawn(1)._1, drawn(1)._3))
+    val nodeIds = (0L until n.toLong).toSeq
+    val seedIds = Seq.fill(3)(rng.nextInt(n).toLong) :+ 77L
+    val label = s"random-$seed" + (if (nullIds) "-null-ids" else "") +
+      (if (nullWeight) "-null-weight" else "") + (if (nullable) "-nullable" else "")
+    if (!nullable)
+      TwinGraph(label, es.toDF("src", "dst", "w"), nodeIds.toDF("node"),
+        seedIds.toDF("node"))
+    else {
+      val extra: Seq[(Option[Long], Option[Long], Option[Long])] =
+        (if (nullIds) Seq((None, Some(3L), Some(1L)), (Some(4L), None, Some(2L)))
+         else Nil) ++ (if (nullWeight) Seq((Some(2L), Some(5L), None)) else Nil)
+      val none = if (nullIds) Seq(Option.empty[Long]) else Nil
+      TwinGraph(label,
+        (es.map { case (s, d, w) => (Option(s), Option(d), Option(w)) } ++ extra)
+          .toDF("src", "dst", "w"),
+        (nodeIds.map(Option(_)) ++ none).toDF("node"),
+        // non-null seeds on nullable edges, unless NULL ids are asked for
+        if (nullIds) (seedIds.map(Option(_)) ++ none).toDF("node")
+        else seedIds.toDF("node"))
+    }
+  }
+
+  test("twin table: every driver twin returns its loop's values and schema") {
+    val all = twins.map(_._1)
+    val mismatches =
+      Seq(randomTwinGraph(1, nullable = false),
+        randomTwinGraph(2, nullable = true),
+        randomTwinGraph(3, nullable = true, nullIds = true))
+        .flatMap(twinMismatches(_, all)) ++
+      twinMismatches(randomTwinGraph(4, nullable = true, nullWeight = true),
+        Seq("pageRankWeightedScaled", "ssspBounded"))
+    assert(mismatches.isEmpty,
+      s"${mismatches.size} twin mismatches:\n" + mismatches.mkString("\n"))
+  }
+
+  test("gate-scale graph ledger queries keep the driver regime") {
+    // a kernel or probe change that silently moved these off the driver
+    // path would not show in any value or bench figure at gate scale
+    Seq("personalized_pagerank", "pagerank_scaled", "pagerank_weighted",
+        "hits_scores", "j4_hierarchy").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf("sf0.001"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("LocalTableScan") && !plan.contains("Exchange"),
+        s"$name left the driver regime:\n$plan")
+    }
   }
 }
 
